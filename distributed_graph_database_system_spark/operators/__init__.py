@@ -9,7 +9,6 @@ from distributed_graph_database_system_spark.operators.graph import (
     dfs_leaves,
     pagerank,
     has_cycle,
-    pregel,
     shortest_path_lengths,
     sssp_weighted,
     topo_levels,
@@ -29,7 +28,6 @@ __all__ = [
     "dfs_leaves",
     "pagerank",
     "has_cycle",
-    "pregel",
     "shortest_path_lengths",
     "sssp_weighted",
     "topo_levels",

@@ -18,6 +18,17 @@ constant-size no matter how many iterations run, which is what keeps the loop
 viable on a 1000-executor cluster. The per-vertex-thread model of the
 reference is replaced wholesale by partition parallelism.
 
+The iterative traversals share two private loop cores, which own the
+per-round checkpoint, the stop probe and the bound (``RuntimeError`` naming
+the operator):
+
+- ``_frontier_traversal`` — visit-once, level-by-level walk: ``bfs``, the
+  multi-source walkers, the what-if reachability sweeps and the SCC backward
+  walk.
+- ``_relax`` — active-set label correction (GraphX-style: only vertices whose
+  label improved last round send): ``sssp_weighted``, ``temporal_bfs``,
+  ``longest_path_dag`` and the SCC forward coloring.
+
 DFS order is inherently sequential, so ``dfs_leaves`` prunes distributively
 (reachability = BFS) and runs the canonical ascending-neighbor DFS on the
 driver over the *reachable* subgraph only — bounded work (the reference caps
@@ -33,6 +44,158 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 EDGE_SCHEMA = "src BIGINT, dst BIGINT"
+
+
+def _all_vertices(edges: DataFrame) -> DataFrame:
+    return (
+        edges.select(F.col("src").alias("vid"))
+        .union(edges.select(F.col("dst").alias("vid")))
+        .distinct()
+    )
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Canonical undirected simple edge set ``(a, b)`` with ``a < b``:
+    direction and duplicates folded, self-loops dropped, lineage cut."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+# ---------------------------------------------------------------------------
+# Loop cores
+# ---------------------------------------------------------------------------
+
+
+def _frontier_traversal(
+    edges: DataFrame,
+    first: DataFrame,
+    row_cols: list[str],
+    dedup_keys: list[str],
+    expand: Callable[[DataFrame, DataFrame], DataFrame],
+    op_name: str,
+    max_iter: int = 10_000,
+    stats: dict | None = None,
+    hint: str = "raise max_iter",
+) -> DataFrame:
+    """Level-synchronous, visit-once traversal: per level
+    ``expand(frontier, e)`` → anti-join against visited ``dedup_keys`` →
+    localCheckpoint, then an empty-``take(1)`` stop probe — two actions
+    per level. ``first`` must carry ``row_cols`` plus ``level``; ``expand``
+    returns next-candidate rows with exactly ``row_cols``. ``dedup_keys`` ⊆
+    ``row_cols`` decides what "already visited" means: ``["vid"]`` gives
+    visit-once-per-vertex semantics, the full row gives per-seed trees.
+
+    Only the per-level frontier is checkpointed; ``visited`` is a lazy union
+    of the checkpointed levels, compacted every 64 levels, so total
+    materialization stays O(|V|) instead of O(|V| × depth) on chain-like
+    graphs. Raises ``RuntimeError`` naming ``op_name`` when ``max_iter``
+    levels did not exhaust the frontier: a truncated reachable set is a
+    wrong answer. When ``stats`` is passed, the executed join-round count
+    lands in ``stats["rounds"]`` (= max level + 1 final empty probe)."""
+    e = edges.select("src", "dst").persist()
+    exhausted = True
+    try:
+        visited = first.localCheckpoint()
+        frontier = visited.select(*row_cols)
+        level = 0
+        while level < max_iter:
+            level += 1
+            expanded = (
+                expand(frontier, e)
+                .join(visited.select(*dedup_keys), dedup_keys, "left_anti")
+                .withColumn("level", F.lit(level))
+                .select(*row_cols, "level")
+                .localCheckpoint()
+            )
+            if not expanded.take(1):
+                exhausted = False
+                break
+            visited = visited.unionByName(expanded)
+            if level % 64 == 0:
+                visited = visited.localCheckpoint()
+            frontier = expanded.select(*row_cols)
+        if stats is not None:
+            stats["rounds"] = level
+    finally:
+        # a task failure mid-loop must not leak the session-lifetime
+        # CacheManager entry
+        e.unpersist()
+    if exhausted:
+        raise RuntimeError(
+            f"{op_name} did not exhaust the frontier within {max_iter} "
+            f"levels; {hint}"
+        )
+    return visited
+
+
+def _relax(
+    edges: DataFrame,
+    init: DataFrame,
+    expand: Callable[[DataFrame, DataFrame], DataFrame],
+    better: Callable[[Column, Column], Column],
+    op_name: str,
+    max_iter: int,
+    stats: dict | None = None,
+    hint: str = "raise max_iter",
+) -> DataFrame:
+    """Active-set label correction to a fixpoint over ``(vid, val)`` labels.
+
+    ``init`` holds the starting labels. Per round, only the FRONTIER — the
+    vertices whose label improved last round (all of ``init`` at first) —
+    sends: ``expand(frontier, e)`` joins it with the edges and returns one
+    best candidate ``(vid, val)`` per destination. A candidate replaces the
+    known label when the vertex has none yet or ``better(candidate,
+    known)`` holds (a NULL verdict counts as no improvement, so ``better``
+    decides the NULL-label cases); the improved vertices are the next
+    frontier. Vertices that did not change send nothing, so a round joins
+    the active set, not all of V, with E (GraphX's active-set messaging).
+
+    Two actions per round: one localCheckpoint of the merged labels carrying a
+    ``_changed`` flag, one emptiness probe on its changed rows. Raises
+    ``RuntimeError`` naming ``op_name`` when ``max_iter`` rounds still
+    improved something. When ``stats`` is passed, the round count lands in
+    ``stats["rounds"]`` (= improving rounds; the last round is the empty
+    probe)."""
+    e = edges.persist()
+    try:
+        known = init.select("vid", "val").localCheckpoint()
+        frontier = known
+        for r in range(max_iter):
+            if stats is not None:
+                stats["rounds"] = r
+            cand = expand(frontier, e).select(
+                "vid", F.col("val").alias("_c"), F.lit(True).alias("_cand")
+            )
+            changed = F.coalesce(
+                F.col("_cand")
+                & (F.col("_known").isNull() | better(F.col("_c"), F.col("val"))),
+                F.lit(False),
+            )
+            merged = (
+                known.withColumn("_known", F.lit(True))
+                .join(cand, "vid", "full_outer")
+                .select(
+                    "vid",
+                    F.when(changed, F.col("_c")).otherwise(F.col("val")).alias("val"),
+                    changed.alias("_changed"),
+                )
+                .localCheckpoint()
+            )
+            known = merged.select("vid", "val")
+            frontier = merged.where(F.col("_changed")).select("vid", "val")
+            if frontier.isEmpty():
+                return known
+    finally:
+        e.unpersist()
+    raise RuntimeError(
+        f"{op_name} did not converge within {max_iter} rounds; {hint}"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -240,63 +403,31 @@ def bfs(edges: DataFrame, start: int, max_iter: int = 10_000) -> DataFrame:
     """Level-synchronous BFS from ``start``; returns ``(vid, level)`` for every
     reachable vertex (start included at level 0), ordered ``level, vid``.
 
-    Each iteration = frontier ⋈ edges (expansion) → anti-join visited (the
-    reference's ``!visited`` check, ``secondaryServer.c:115``) → union into
-    visited. Only the per-level FRONTIER is ``localCheckpoint``-ed (it both
-    materializes the level so ``take(1)`` is cheap and cuts lineage);
-    ``visited`` is a lazy union over the already-checkpointed levels, so
-    total materialization is O(|V|) across the whole run — re-checkpointing
-    the accumulated set every level would be O(|V| × depth), quadratic on
-    chain-like graphs. One shuffle per level on the join key — at cluster
-    scale, edges pre-partitioned by ``src`` keep every level co-located:
-    that layout is real, not aspirational — ``GraphStore(buckets=N)`` stores
-    graphs hash-bucketed + sorted by ``src``, and src-keyed joins against
-    the loaded table plan with no edge-side Exchange (tests/test_graph.py).
+    One :func:`_frontier_traversal` level = frontier ⋈ edges (expansion) →
+    anti-join visited (the reference's ``!visited`` check,
+    ``secondaryServer.c:115``) → union into visited. One shuffle per level on
+    the join key — at cluster scale, edges pre-partitioned by ``src`` keep
+    every level co-located: that layout is real, not aspirational —
+    ``GraphStore(buckets=N)`` stores graphs hash-bucketed + sorted by
+    ``src``, and src-keyed joins against the loaded table plan with no
+    edge-side Exchange (tests/test_graph.py). Raises ``RuntimeError`` when
+    ``max_iter`` levels do not exhaust the frontier (bound: eccentricity of
+    ``start``).
     """
-    spark = edges.sparkSession
-    e = edges.select("src", "dst").persist()
-    exhausted = True
-    try:
-        first = spark.createDataFrame(
-            [(int(start), 0)], "vid BIGINT, level INT"
-        ).localCheckpoint()
-        visited = first  # lazy union of checkpointed per-level frames
-        frontier = first.select("vid")
-        level = 0
-        while level < max_iter:
-            level += 1
-            nxt = (
-                frontier.join(e, frontier["vid"] == e["src"])
-                .select(e["dst"].alias("vid"))
-                .distinct()
-                .join(visited.select("vid"), "vid", "left_anti")
-                .withColumn("level", F.lit(level))
-                .localCheckpoint()
-            )
-            if not nxt.take(1):
-                exhausted = False
-                break
-            visited = visited.unionByName(nxt)
-            # Compact every 64 levels: keeps the union plan bounded on very
-            # deep (chain-like) graphs while staying O(|V| × depth/64) total
-            # re-materialization instead of the quadratic every-level
-            # compaction.
-            if level % 64 == 0:
-                visited = visited.localCheckpoint()
-            frontier = nxt.select("vid")
-    finally:
-        # finally: a task failure mid-loop must not leak the session-lifetime
-        # CacheManager entry
-        e.unpersist()
-    if exhausted:
-        # a silently truncated reachable set is a WRONG answer for every
-        # caller (shortest_path_lengths, dfs_leaves pruning) — same contract
-        # as pregel's non-convergence raise
-        raise RuntimeError(
-            f"bfs did not exhaust the frontier within max_iter={max_iter} "
-            "levels; raise max_iter (bound: graph eccentricity from start)"
+
+    def expand(frontier: DataFrame, e: DataFrame) -> DataFrame:
+        return (
+            frontier.join(e, frontier["vid"] == e["src"])
+            .select(e["dst"].alias("vid"))
+            .distinct()
         )
-    return visited.orderBy("level", "vid")
+
+    first = edges.sparkSession.createDataFrame(
+        [(int(start), 0)], "vid BIGINT, level INT"
+    )
+    return _frontier_traversal(
+        edges, first, ["vid"], ["vid"], expand, "bfs", max_iter
+    ).orderBy("level", "vid")
 
 
 # ---------------------------------------------------------------------------
@@ -370,68 +501,8 @@ def dfs_leaves(
 
 
 # ---------------------------------------------------------------------------
-# Pregel-style propagation + derived analytics
+# Components, shortest paths, ranking + derived analytics
 # ---------------------------------------------------------------------------
-
-
-def pregel(
-    vertices: DataFrame,
-    edges: DataFrame,
-    msg: Column,
-    agg: Callable[[Column], Column],
-    update: Callable[[Column, Column], Column],
-    max_iter: int = 50,
-) -> DataFrame:
-    """Minimal Pregel loop over ``vertices (vid, val)`` and ``edges (src, dst)``.
-
-    Per superstep: every vertex sends ``msg`` — an expression over its
-    ``val`` AND any edge columns (e.g. ``weight``) — along each out-edge to
-    ``dst``; incoming messages are combined with ``agg``; each vertex's new
-    ``val`` is ``update(old_val, combined_msg)`` (combined_msg is NULL when
-    no messages arrived). Stops when no ``val`` changed or ``max_iter``
-    supersteps ran. Lineage is cut per superstep.
-    """
-    reserved = {"vid", "val"} & set(edges.columns)
-    if reserved:
-        raise ValueError(
-            f"edge columns {sorted(reserved)} collide with pregel's vertex "
-            "attributes; rename them before calling pregel"
-        )
-    v = vertices.select("vid", "val").localCheckpoint()
-    # keep ALL edge columns: message expressions may read edge attributes
-    e = edges.persist()
-    converged = False
-    try:
-        for _ in range(max_iter):
-            msgs = (
-                v.join(e, v["vid"] == e["src"])
-                .select(e["dst"].alias("vid"), msg.alias("m"))
-                .groupBy("vid")
-                .agg(agg(F.col("m")).alias("m"))
-            )
-            new_v = (
-                v.join(msgs, "vid", "left")
-                .select(
-                    "vid", update(F.col("val"), F.col("m")).alias("val")
-                )
-                .localCheckpoint()
-            )
-            changed = new_v.join(v, ["vid", "val"], "left_anti").take(1)
-            v = new_v
-            if not changed:
-                converged = True
-                break
-    finally:
-        # finally: a task failure mid-superstep must not leak the cache entry
-        e.unpersist()
-    if not converged:
-        # a silently-unconverged fixed point is a WRONG answer for every
-        # current caller (components split, SSSP distances missing)
-        raise RuntimeError(
-            f"pregel did not converge within max_iter={max_iter} supersteps; "
-            "raise max_iter (bound: graph diameter)"
-        )
-    return v
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -477,44 +548,20 @@ def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 50,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Weakly connected components: every vertex labeled with the minimum
     vid of its component. Returns ``(vid, comp)``.
 
-    ``algorithm="star"`` (default) is alternating large-star/small-star
-    (Kiveris et al., SoCC'14): converges in O(log n) rounds independent of
-    graph diameter — the variant that survives 100 TB path-shaped or
-    high-diameter graphs, where hash-min's O(diameter) rounds (each a full
-    shuffle) are the bottleneck. ``algorithm="hashmin"`` keeps the simple
-    pregel label-propagation baseline; both produce identical labels
-    (asserted against each other and a driver-side oracle in
-    tests/test_graph.py).
+    Alternating large-star/small-star (Kiveris et al., SoCC'14): converges
+    in O(log n) rounds independent of graph diameter, so it survives 100 TB
+    path-shaped or high-diameter graphs, where label propagation would need
+    O(diameter) rounds, each a full shuffle. Checked against a driver-side
+    union-find in tests/test_graph.py. Its round is a whole-edge-set
+    rewrite with its own convergence test (equal edge sets), so it is not
+    one of the two loop cores; it raises ``RuntimeError`` after
+    ``max_iter`` rounds.
     """
-    v = (
-        vertices.select(F.col("vid"))
-        if vertices is not None
-        else edges.select(F.col("src").alias("vid"))
-        .union(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
-    if algorithm == "hashmin":
-        sym = edges.select("src", "dst").union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        init = v.withColumn("val", F.col("vid"))
-        out = pregel(
-            init,
-            sym,
-            msg=F.col("val"),
-            agg=F.min,
-            update=lambda old, m: F.least(old, F.coalesce(m, old)),
-            max_iter=max_iter,
-        )
-        return out.select("vid", F.col("val").alias("comp"))
-    if algorithm != "star":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-
+    v = vertices.select(F.col("vid")) if vertices is not None else _all_vertices(edges)
     e = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
@@ -525,7 +572,7 @@ def connected_components(
     converged = n_prev == 0
     for _ in range(max_iter):
         # localCheckpoint per round: constant-size plan regardless of round
-        # count (same rationale as bfs/pregel)
+        # count (same rationale as the loop cores)
         new_e = _small_star(_large_star(e)).localCheckpoint()
         n_new = new_e.count()
         # both sets are distinct: equal count + empty (new ∖ old) ⟺ equal
@@ -577,38 +624,29 @@ def sssp_weighted(
     edges: DataFrame, start: int, max_iter: int = 50
 ) -> DataFrame:
     """Single-source shortest paths over weighted edges ``(src, dst, weight)``
-    — distributed Bellman-Ford expressed through ``pregel``: each superstep
-    relaxes every edge (msg = dist(src) + weight, combined with min), so the
-    message expression reads an *edge* column, demonstrating that the pregel
-    helper is not limited to vertex-state propagation. Converges in ≤
-    |V| - 1 supersteps (the pregel loop stops early when no distance
-    changes). Returns ``(vid, distance)`` for reachable vertices only."""
-    spark = edges.sparkSession
-    verts = (
-        edges.select(F.col("src").alias("vid"))
-        .union(edges.select(F.col("dst").alias("vid")))
-        # the start vertex is always present (distance 0) even when isolated,
-        # matching bfs()'s always-emit-start semantics
-        .union(spark.createDataFrame([(int(start),)], "vid BIGINT"))
-        .distinct()
-        .withColumn(
-            "val",
-            F.when(F.col("vid") == start, F.lit(0.0)).otherwise(
-                F.lit(float("inf"))
-            ),
+    — distributed Bellman-Ford on the :func:`_relax` core: each round relaxes
+    the out-edges of the vertices whose distance dropped last round
+    (candidate = dist(src) + weight, min per destination). Converges in ≤
+    |V| - 1 rounds. Returns ``(vid, distance)`` for reachable vertices only;
+    the start vertex is always present (distance 0) even when isolated,
+    matching bfs()'s always-emit-start semantics."""
+
+    def expand(frontier: DataFrame, e: DataFrame) -> DataFrame:
+        return (
+            frontier.join(e, frontier["vid"] == e["src"])
+            .groupBy(F.col("dst").alias("vid"))
+            .agg(F.min(F.col("val") + F.col("weight")).alias("val"))
+            # an unreached vertex is at +inf: only a finite offer reaches it
+            .where(F.col("val") < float("inf"))
         )
+
+    init = edges.sparkSession.createDataFrame(
+        [(int(start), 0.0)], "vid BIGINT, val DOUBLE"
     )
-    out = pregel(
-        verts,
-        edges.select("src", "dst", "weight"),
-        msg=F.col("val") + F.col("weight"),
-        agg=F.min,
-        update=lambda old, m: F.least(old, F.coalesce(m, old)),
-        max_iter=max_iter,
-    )
-    return out.where(F.col("val") != float("inf")).select(
-        "vid", F.col("val").alias("distance")
-    )
+    return _relax(
+        edges.select("src", "dst", "weight"), init, expand,
+        lambda c, k: c < k, "sssp_weighted", max_iter,
+    ).select("vid", F.col("val").alias("distance"))
 
 
 def pagerank(
@@ -630,33 +668,44 @@ def pagerank(
     order within the contribution sum (~1e-16)."""
     spark = edges.sparkSession
     e = edges.select("src", "dst")
-    v = (
-        vertices.select("vid")
-        if vertices is not None
-        else e.select(F.col("src").alias("vid"))
-        .union(e.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
-    out_deg = e.groupBy(F.col("src").alias("vid")).agg(
-        F.count("*").alias("out_degree")
-    )
-    base = (
-        v.join(out_deg, "vid", "left")
-        .select("vid", F.coalesce("out_degree", F.lit(0)).alias("out_degree"))
-        .persist()
-    )
+    v = vertices.select("vid") if vertices is not None else _all_vertices(e)
+    base = _with_out_degree(v, e).persist()
     n = base.count()
     if n == 0:
         # empty graph: empty result, matching bfs/connected_components
         # (1.0 / n below would raise ZeroDivisionError on the driver)
         base.unpersist()
         return spark.createDataFrame([], "vid BIGINT, rank DOUBLE")
+    rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+        F.coalesce(F.col("c"), F.lit(0.0)) + F.col("_dangling") / F.lit(float(n))
+    )
+    return _rank_iterations(e, base, F.lit(1.0 / n), rank, iterations)
+
+
+def _with_out_degree(v: DataFrame, e: DataFrame) -> DataFrame:
+    out_deg = e.groupBy(F.col("src").alias("vid")).agg(
+        F.count("*").alias("out_degree")
+    )
+    return v.join(out_deg, "vid", "left").select(
+        "vid", F.coalesce("out_degree", F.lit(0)).alias("out_degree")
+    )
+
+
+def _rank_iterations(
+    e: DataFrame, base: DataFrame, init: Column, rank: Column, iterations: int
+) -> DataFrame:
+    """The PageRank iteration shared by :func:`pagerank` and
+    :func:`personalized_pagerank`. ``base`` is the persisted vertex frame
+    ``(vid, out_degree, ...)``, unpersisted here. Per iteration:
+    contributions rank/out_degree flow along out-edges (one shuffle on dst)
+    and sum to ``c`` (NULL for a vertex nobody links to); the dangling mass
+    ``_dangling`` is a one-row aggregate broadcast-joined into the update;
+    ``rank`` computes the next rank from those and ``base``'s other columns.
+    Each iteration is ONE job, the localCheckpoint that cuts lineage."""
     try:
-        ranks = base.select(
-            "vid", F.lit(1.0 / n).alias("rank")
-        ).localCheckpoint()
+        ranks = base.select("vid", init.alias("rank")).localCheckpoint()
         for _ in range(iterations):
-            with_deg = ranks.join(base, "vid")
+            with_deg = ranks.join(base.select("vid", "out_degree"), "vid")
             dangling = with_deg.where(F.col("out_degree") == 0).agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
             )
@@ -670,24 +719,14 @@ def pagerank(
                 .agg(F.sum("c").alias("c"))
             )
             ranks = (
-                base.select("vid")
+                base.drop("out_degree")
                 .join(contribs, "vid", "left")
                 .crossJoin(F.broadcast(dangling))
-                .select(
-                    "vid",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("c"), F.lit(0.0))
-                            + F.col("_dangling") / F.lit(float(n))
-                        )
-                    ).alias("rank"),
-                )
+                .select("vid", rank.alias("rank"))
                 .localCheckpoint()
             )
     finally:
-        # finally: a task failure mid-iteration must not leak the cache entry
+        # a task failure mid-iteration must not leak the cache entry
         base.unpersist()
     return ranks
 
@@ -717,55 +756,12 @@ def personalized_pagerank(
         .union(spark.createDataFrame([(s,) for s in src_list], "vid BIGINT"))
         .distinct()
     )
-    out_deg = e.groupBy(F.col("src").alias("vid")).agg(
-        F.count("*").alias("out_degree")
-    )
     p = F.when(F.col("vid").isin(src_list), 1.0 / len(src_list)).otherwise(0.0)
-    base = (
-        v.join(out_deg, "vid", "left")
-        .select(
-            "vid",
-            F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-            p.alias("p"),
-        )
-        .persist()
+    base = _with_out_degree(v, e).withColumn("p", p).persist()
+    rank = F.lit(1.0 - damping) * F.col("p") + F.lit(damping) * (
+        F.coalesce(F.col("c"), F.lit(0.0)) + F.col("_dangling") * F.col("p")
     )
-    try:
-        ranks = base.select("vid", F.col("p").alias("rank")).localCheckpoint()
-        for _ in range(iterations):
-            with_deg = ranks.join(base.select("vid", "out_degree"), "vid")
-            dangling = with_deg.where(F.col("out_degree") == 0).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
-            )
-            contribs = (
-                with_deg.join(e, with_deg["vid"] == e["src"])
-                .select(
-                    F.col("dst").alias("vid"),
-                    (F.col("rank") / F.col("out_degree")).alias("c"),
-                )
-                .groupBy("vid")
-                .agg(F.sum("c").alias("c"))
-            )
-            ranks = (
-                base.select("vid", "p")
-                .join(contribs, "vid", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "vid",
-                    (
-                        F.lit(1.0 - damping) * F.col("p")
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("c"), F.lit(0.0))
-                            + F.col("_dangling") * F.col("p")
-                        )
-                    ).alias("rank"),
-                )
-                .localCheckpoint()
-            )
-    finally:
-        base.unpersist()
-    return ranks
+    return _rank_iterations(e, base, F.col("p"), rank, iterations)
 
 
 def label_propagation(
@@ -787,16 +783,9 @@ def label_propagation(
     Reference parity: no analogue (reference analytics are R3/R4 only);
     north-star "GraphX + Pregel for analytics" extension.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    sym = e.unionAll(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint()  # (a → neighbor b), both directions
+    e = _undirected(edges)
+    # (a → neighbor b), both directions
+    sym = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     labels = (
         sym.select(F.col("a").alias("vid"))
         .distinct()
@@ -833,7 +822,7 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 500) -> DataFrame:
     of the graph — O(log n)-ish on real graphs, but O(n) on degenerate
     chains (k=2 strips two endpoints per round); raises after ``max_iter``
     rather than returning a superset that still contains sub-k vertices
-    (same convergence contract as pregel above).
+    (same convergence contract as the loop cores above).
 
     Reference parity: no analogue — the reference's only analytics are the
     R3/R4 traversals (``secondaryServer.c:56-179``); this extends the
@@ -841,15 +830,7 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 500) -> DataFrame:
     """
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
-    # undirected simple graph: canonical (min, max) pairs, self-loops out
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _undirected(edges)
     for _ in range(max_iter):
         deg = (
             e.select(F.col("a").alias("v"))
@@ -898,12 +879,7 @@ def topo_levels(edges: DataFrame, max_iter: int = 10_000) -> DataFrame:
     BFS depth.
     """
     e = edges.select("src", "dst").distinct().localCheckpoint()
-    verts = (
-        e.select(F.col("src").alias("vid"))
-        .union(e.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _all_vertices(e).localCheckpoint()
     spark = edges.sparkSession
     out = spark.createDataFrame([], "vid BIGINT, topo_level INT")
     for level in range(max_iter):
@@ -1088,22 +1064,19 @@ def strongly_connected_components(
     xxhash64 is seed-free.
 
     Iterative DataFrame discipline as everywhere in this module: every
-    loop step localCheckpoints, so plans stay constant-size. Two separate
-    bounds, because they measure different things: ``max_iter`` caps the
-    OUTER trim/color rounds, while ``max_hops`` caps the inner
-    color-propagation and backward-walk loops (bounded by graph diameter
-    — the same regime as bfs's default). When ``stats`` is passed the
-    outer-round count lands in ``stats["outer_rounds"]``.
+    loop step localCheckpoints, so plans stay constant-size. The coloring
+    runs on the :func:`_relax` core, the backward walk on the
+    :func:`_frontier_traversal` core. Two separate bounds, because they
+    measure different things: ``max_iter`` caps the OUTER trim/color
+    rounds, while ``max_hops`` caps the inner color-propagation and
+    backward-walk loops (bounded by graph diameter — the same regime as
+    bfs's default); each raises ``RuntimeError``. When ``stats`` is passed
+    the outer-round count lands in ``stats["outer_rounds"]``.
     """
     # vertices come from the UNFILTERED edge set: a vertex whose only
     # incident edge is a self-loop is a singleton SCC and must appear in
     # the output (trim resolves it once self-loop edges are dropped below)
-    verts = (
-        edges.select(F.col("src").alias("vid"))
-        .union(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _all_vertices(edges).localCheckpoint()
     e_all = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
@@ -1157,67 +1130,40 @@ def strongly_connected_components(
             F.xxhash64(F.col("vid"), F.lit(_outer)).alias("p"),
             F.col("vid").alias("cv"),
         )
-        colors = verts.select("vid", prio.alias("color")).localCheckpoint()
-        for _c in range(max_hops):
-            incoming = (
-                e.join(colors.select(F.col("vid").alias("src"), "color"), "src")
+
+        def max_in(frontier: DataFrame, e: DataFrame) -> DataFrame:
+            return (
+                frontier.join(e, frontier["vid"] == e["src"])
                 .groupBy(F.col("dst").alias("vid"))
-                .agg(F.max("color").alias("in_color"))
+                .agg(F.max("val").alias("val"))
             )
-            updated = (
-                colors.join(incoming, "vid", "left")
-                .select(
-                    "vid",
-                    F.greatest(
-                        "color", F.coalesce("in_color", F.col("color"))
-                    ).alias("color"),
-                )
-                .localCheckpoint()
-            )
-            changed = updated.alias("u").join(
-                colors.alias("c"), "vid"
-            ).where(
-                (F.col("u.color.p") != F.col("c.color.p"))
-                | (F.col("u.color.cv") != F.col("c.color.cv"))
-            )
-            colors = updated
-            if changed.isEmpty():
-                break
-        else:
-            raise RuntimeError("scc: coloring did not converge")
+
+        # color = the "val" label: the max priority reaching each vertex
+        colors = _relax(
+            e, verts.select("vid", prio.alias("val")), max_in,
+            lambda c, k: c > k, "strongly_connected_components", max_hops,
+            hint="raise max_hops",
+        )
         # --- backward reachability from roots within color classes --------
         # a root is the vertex whose OWN priority won its class; the class
-        # (and the root's identity) is color.cv from here on
-        roots = colors.where(F.col("vid") == F.col("color.cv"))
-        reached = roots.select(
-            "vid", F.col("color.cv").alias("root")
-        ).localCheckpoint()
-        frontier = reached
-        rev = e.select(F.col("dst").alias("vid"), F.col("src").alias("prev"))
-        for _b in range(max_hops):
-            step = (
-                frontier.join(rev, "vid")
-                .select(F.col("prev").alias("vid"), "root")
-                .join(
-                    colors.select("vid", F.col("color.cv").alias("root")),
-                    ["vid", "root"],
-                    "left_semi",
-                )
-                .join(reached, ["vid", "root"], "left_anti")
+        # (and the root's identity) is val.cv from here on. Walking REVERSED
+        # edges restricted to the root's class, keyed by (vid, root).
+        cls = colors.select("vid", F.col("val.cv").alias("root"))
+
+        def back(frontier: DataFrame, rev: DataFrame) -> DataFrame:
+            return (
+                frontier.join(rev, frontier["vid"] == rev["src"])
+                .select(rev["dst"].alias("vid"), "root")
+                .join(cls, ["vid", "root"], "left_semi")
                 .distinct()
-                .localCheckpoint()
             )
-            if step.isEmpty():
-                break
-            # lazy union of checkpointed per-level frames (bfs discipline);
-            # compact periodically so the anti-join's plan stays bounded on
-            # deep components without O(V × depth) rematerialization
-            reached = reached.union(step)
-            if _b % 64 == 63:
-                reached = reached.localCheckpoint()
-            frontier = step
-        else:
-            raise RuntimeError("scc: backward walk did not converge")
+
+        reached = _frontier_traversal(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            cls.where(F.col("vid") == F.col("root")).withColumn("level", F.lit(0)),
+            ["vid", "root"], ["vid", "root"], back,
+            "strongly_connected_components", max_hops, hint="raise max_hops",
+        )
         # scc id = MIN member id (deterministic, orientation-free)
         scc_min = reached.groupBy("root").agg(F.min("vid").alias("scc"))
         found = reached.join(scc_min, "root").select("vid", "scc").localCheckpoint()
@@ -1229,62 +1175,10 @@ def strongly_connected_components(
             .select("src", "dst")
             .localCheckpoint()
         )
-    raise RuntimeError(f"scc: did not finish within {max_iter} outer rounds")
-
-
-def _frontier_traversal(
-    edges: DataFrame,
-    first: DataFrame,
-    row_cols: list[str],
-    dedup_keys: list[str],
-    expand,
-    op_name: str,
-    max_iter: int = 10_000,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Shared level-synchronous traversal discipline for the multi-source
-    walkers: per-level ``expand(frontier, e)`` → anti-join against
-    visited ``dedup_keys`` → localCheckpoint, lazy unionByName with a %64
-    compaction, empty-``take(1)`` stop probe, and the exhausted guard.
-    ``first`` must carry ``row_cols`` plus ``level``; ``expand`` returns
-    next-candidate rows with exactly ``row_cols``. ``dedup_keys`` ⊆
-    ``row_cols`` decides what "already visited" means: ``["vid"]`` gives
-    visit-once-per-vertex (nearest-landmark) semantics, the full row
-    gives per-seed trees. When ``stats`` is passed, the executed
-    join-round count lands in ``stats["rounds"]`` (= max level + 1 final
-    empty probe)."""
-    e = edges.select("src", "dst").persist()
-    exhausted = True
-    try:
-        visited = first.localCheckpoint()
-        frontier = visited.select(*row_cols)
-        level = 0
-        while level < max_iter:
-            level += 1
-            expanded = (
-                expand(frontier, e)
-                .join(visited.select(*dedup_keys), dedup_keys, "left_anti")
-                .withColumn("level", F.lit(level))
-                .select(*row_cols, "level")
-                .localCheckpoint()
-            )
-            if not expanded.take(1):
-                exhausted = False
-                break
-            visited = visited.unionByName(expanded)
-            if level % 64 == 0:
-                visited = visited.localCheckpoint()
-            frontier = expanded.select(*row_cols)
-        if stats is not None:
-            stats["rounds"] = level
-    finally:
-        e.unpersist()
-    if exhausted:
-        raise RuntimeError(
-            f"{op_name} did not exhaust the frontier within "
-            f"max_iter={max_iter} levels"
-        )
-    return visited
+    raise RuntimeError(
+        f"strongly_connected_components did not finish within {max_iter} "
+        "outer rounds; raise max_iter"
+    )
 
 
 def multi_source_bfs(
@@ -1390,54 +1284,30 @@ def temporal_bfs(
     usable from an earlier one), so min-labels lose nothing; labels are
     drawn from the finite edge-timestamp set and only decrease, so the
     loop converges. Start's label is NULL-as-minus-infinity (every
-    outgoing edge qualifies). Same per-round localCheckpoint and
-    lazy-union discipline as bfs/sssp. When ``stats`` is passed, the
+    outgoing edge qualifies). Runs on the :func:`_relax` core, like
+    sssp_weighted. When ``stats`` is passed, the
     converged round count is recorded under ``stats["rounds"]`` (the
     scale probe reads it — the label-correcting bound is temporal
     diameter + relabeling rounds, not plain hop diameter)."""
-    e = edges.select("src", "dst", F.col("ts").alias("_ets"))
-    spark = edges.sparkSession
-    known = spark.createDataFrame(
-        [(int(start),)], "vid BIGINT"
-    ).select("vid", F.lit(None).cast("timestamp").alias("arrival"))
-    known = known.localCheckpoint()
-    frontier = known
-    for _round in range(max_iter):
-        if stats is not None:
-            stats["rounds"] = _round
-        cand = (
+
+    def expand(frontier: DataFrame, e: DataFrame) -> DataFrame:
+        return (
             frontier.join(e, frontier["vid"] == e["src"])
             # NULL arrival = start's minus-infinity: every edge qualifies
-            .where(
-                F.col("arrival").isNull() | (F.col("_ets") >= F.col("arrival"))
-            )
+            .where(F.col("val").isNull() | (F.col("_ets") >= F.col("val")))
             .groupBy(F.col("dst").alias("vid"))
-            .agg(F.min("_ets").alias("arrival"))
+            .agg(F.min("_ets").alias("val"))
         )
-        improved = (
-            cand.alias("c")
-            .join(known.alias("k"), "vid", "left")
-            .where(
-                F.col("k.arrival").isNull() & F.col("k.vid").isNull()
-                | (
-                    F.col("k.arrival").isNotNull()
-                    & (F.col("c.arrival") < F.col("k.arrival"))
-                )
-            )
-            .select("vid", F.col("c.arrival").alias("arrival"))
-            .localCheckpoint()
-        )
-        if improved.isEmpty():
-            return known.orderBy("arrival", "vid")
-        known = (
-            known.join(improved.select("vid"), "vid", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint()
-        )
-        frontier = improved
-    raise RuntimeError(
-        f"temporal_bfs did not converge within max_iter={max_iter} rounds"
-    )
+
+    init = edges.sparkSession.createDataFrame(
+        [(int(start),)], "vid BIGINT"
+    ).select("vid", F.lit(None).cast("timestamp").alias("val"))
+    return _relax(
+        edges.select("src", "dst", F.col("ts").alias("_ets")), init, expand,
+        # a NULL known label is the start's minus-infinity: never improved
+        lambda c, k: k.isNotNull() & (c < k),
+        "temporal_bfs", max_iter, stats,
+    ).select("vid", F.col("val").alias("arrival")).orderBy("arrival", "vid")
 
 
 def longest_path_dag(
@@ -1449,8 +1319,8 @@ def longest_path_dag(
     vertices) — the critical-path / earliest-completion analytic of
     scheduling, the weighted generalization of :func:`topo_levels`.
 
-    Max-relaxation frontier loop (the sssp_weighted shape with max instead
-    of min): only genuine path values propagate, improvements are
+    Max-relaxation on the :func:`_relax` core (the sssp_weighted shape with
+    max instead of min): only genuine path values propagate, improvements are
     monotone increasing and drawn from the finite set of path sums, so on
     a DAG the loop converges within longest-hop-count rounds. Vertices
     unreachable from any source (including every vertex of a SOURCELESS
@@ -1464,38 +1334,19 @@ def longest_path_dag(
         .distinct()
         .join(e.select(F.col("dst").alias("vid")).distinct(), "vid", "left_anti")
     )
-    known = sources.select(
-        "vid", F.lit(0.0).cast("double").alias("dist")
-    ).localCheckpoint()
-    frontier = known
-    for _ in range(max_iter):
-        cand = (
+
+    def expand(frontier: DataFrame, e: DataFrame) -> DataFrame:
+        return (
             frontier.join(e, frontier["vid"] == e["src"])
             .groupBy(F.col("dst").alias("vid"))
-            .agg(F.max(F.col("dist") + F.col("weight")).alias("dist"))
+            .agg(F.max(F.col("val") + F.col("weight")).alias("val"))
         )
-        improved = (
-            cand.alias("c")
-            .join(known.alias("k"), "vid", "left")
-            .where(
-                F.col("k.vid").isNull()
-                | (F.col("c.dist") > F.col("k.dist"))
-            )
-            .select("vid", F.col("c.dist").alias("dist"))
-            .localCheckpoint()
-        )
-        if improved.isEmpty():
-            return known.orderBy("dist", "vid")
-        known = (
-            known.join(improved.select("vid"), "vid", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint()
-        )
-        frontier = improved
-    raise RuntimeError(
-        f"longest_path_dag did not converge within max_iter={max_iter} "
-        "rounds — the input likely contains a cycle (see has_cycle)"
-    )
+
+    return _relax(
+        e, sources.select("vid", F.lit(0.0).cast("double").alias("val")),
+        expand, lambda c, k: c > k, "longest_path_dag", max_iter,
+        hint="the input likely contains a cycle (see has_cycle)",
+    ).select("vid", F.col("val").alias("dist")).orderBy("dist", "vid")
 
 
 def shortest_path(
@@ -1585,14 +1436,7 @@ def maximal_independent_set(edges: DataFrame, max_iter: int = 200) -> DataFrame:
     Reference parity: no analogue (reference analytics are R3/R4 only);
     north-star analytics extension.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _undirected(edges)
     undecided = (
         e.select(F.col("a").alias("vid"))
         .unionAll(e.select(F.col("b").alias("vid")))
@@ -1852,14 +1696,7 @@ def core_decomposition(edges: DataFrame, max_k: int = 1000) -> DataFrame:
 
     Reference parity: no analogue; extends the k_core operator to the
     full decomposition (k_core(k) == coreness ≥ k, asserted in tests)."""
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _undirected(edges)
     alive = (
         e.select(F.col("a").alias("vid"))
         .unionAll(e.select(F.col("b").alias("vid")))
@@ -1921,14 +1758,7 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
     tests/test_graph.py)."""
     if k < 2:
         raise ValueError(f"k_truss: k must be >= 2, got {k}")
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _undirected(edges)
     for _ in range(max_iter):
         if e.isEmpty():
             return e.withColumn("support", F.lit(0).cast("bigint"))
@@ -2097,12 +1927,7 @@ def betweenness_centrality(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
     e = e.distinct().localCheckpoint()
-    verts = (
-        e.select(F.col("src").alias("vid"))
-        .unionAll(e.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _all_vertices(e).localCheckpoint()
     if sources is None:
         # Exact mode collects EVERY vertex id and runs one sweep per
         # vertex — a fixture-scale verification mode. The guard stops an
@@ -2275,26 +2100,14 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     as every community-metric convention here. Scale: two broadcast-able
     joins against the label table + integer aggregates; no iteration.
     Reference parity: no analogue; north-star analytics extension."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected(edges)
     m = und.count()
     if m == 0:
         # even with no surviving edges the vertex census applies (raw-edge
         # universe: self-loop-only vertices count as singletons or under
         # their labels); q is 0 by convention when m = 0
         lab0 = labels.select("vid", "label")
-        verts0 = (
-            edges.select(F.col("src").alias("vid"))
-            .unionAll(edges.select(F.col("dst").alias("vid")))
-            .distinct()
-            .join(lab0, "vid", "left")
-        )
+        verts0 = _all_vertices(edges).join(lab0, "vid", "left")
         eff0 = F.when(
             F.col("label").isNotNull(),
             F.struct(F.lit(0).alias("t"), F.col("label").alias("k")),
@@ -2323,11 +2136,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     # degree 0 after the strip but still counts toward n_communities (as
     # a singleton or under its label, per the documented convention); its
     # degree term contributes 0 to q either way
-    verts = (
-        edges.select(F.col("src").alias("vid"))
-        .unionAll(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
+    verts = _all_vertices(edges)
     deg_e = (
         und.select(F.col("a").alias("vid"))
         .unionAll(und.select(F.col("b").alias("vid")))
@@ -2372,24 +2181,12 @@ def greedy_coloring(edges: DataFrame, max_colors: int = 64) -> DataFrame:
     cut per round via the MIS operator's own checkpoints plus the
     shrinking edge relation's. Reference parity: no analogue; north-star
     analytics extension."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected(edges)
     spark = edges.sparkSession
     # vertex universe from the RAW edges: a vertex whose only edges are
     # self-loops must still receive a color (it is isolated after the
     # strip, consistent with maximal_independent_set's documented reading)
-    remaining_v = (
-        edges.select(F.col("src").alias("vid"))
-        .unionAll(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
+    remaining_v = _all_vertices(edges).localCheckpoint()
     remaining_e = und
     out = None
     for color in range(max_colors):
@@ -2470,12 +2267,7 @@ def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
     # vertex universe from the RAW edges (the greedy_coloring convention):
     # a vertex whose only edges are self-loops still appears, scored 0/0
     # mass share like any other sink/source without the relevant edges
-    verts = (
-        edges.select(F.col("src").alias("vid"))
-        .unionAll(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _all_vertices(edges).localCheckpoint()
     n = verts.count()
     if n == 0:
         return verts.select(
@@ -2554,14 +2346,6 @@ def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
             F.round(F.col("h").cast("double"), 6).alias("hub"),
             F.round(F.col("a").cast("double"), 6).alias("authority"),
         )
-    )
-
-
-def _all_vertices(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src").alias("vid"))
-        .union(edges.select(F.col("dst").alias("vid")))
-        .distinct()
     )
 
 

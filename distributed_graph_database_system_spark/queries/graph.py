@@ -285,10 +285,10 @@ def graph_triangles_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT CAST(v AS BIGINT) AS vid, CAST(d AS DOUBLE) AS distance FROM (VALUES "
         "(1, 0.0), (2, 3.0), (3, 1.0), (4, 8.0), (5, 9.0)) AS t(v, d)"
     ),
-    tags=("graph", "sssp", "pregel"),
+    tags=("graph", "sssp", "bellman_ford"),
 )
 def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted single-source shortest paths (pregel Bellman-Ford) on a
+    """Weighted single-source shortest paths (active-set Bellman-Ford) on a
     fixed 5-vertex weighted digraph; the indirect route 1→3→2 (3.0) must
     beat the direct 1→2 edge (4.0). Small exact sums of doubles —
     deterministic across engines."""

@@ -49,22 +49,15 @@ def graph_dominator_tree_g7(spark: SparkSession, sf_dir: str) -> DataFrame:
     root dominates all |V|). Golden recomputed by an
     independent python fixpoint; vertex 7 is unreachable from the root
     and correctly absent."""
+    from distributed_graph_database_system_spark.operators.graph import bfs
     from distributed_graph_database_system_spark.queries.graph import G7_DAG
 
     edges = spark.createDataFrame(G7_DAG, "src BIGINT, dst BIGINT")
     root = 1
-    # reachable set via frontier expansion
-    reach = spark.createDataFrame([(root,)], "vid BIGINT")
-    while True:
-        nxt = (
-            edges.join(reach.withColumnRenamed("vid", "src"), "src")
-            .select(F.col("dst").alias("vid"))
-            .unionByName(reach)
-            .distinct()
-        )
-        if nxt.count() == reach.count():
-            break
-        reach = nxt
+    reach = bfs(edges, root).select("vid")
+    # the fixpoint settles within DAG depth + 1 ≤ |reach| rounds, plus one
+    # confirming round
+    max_rounds = reach.count() + 1
     e = edges.join(reach.withColumnRenamed("vid", "src"), "src").join(
         reach.withColumnRenamed("vid", "dst"), "dst"
     )
@@ -80,7 +73,7 @@ def graph_dominator_tree_g7(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.createDataFrame([(root, root)], "vid BIGINT, d BIGINT")
         )
     )
-    while True:
+    for _ in range(max_rounds):
         # d survives for v (v != root) iff d == v, or d is in dom(p) for
         # EVERY predecessor p of v.
         via_preds = (
@@ -109,6 +102,11 @@ def graph_dominator_tree_g7(spark: SparkSession, sf_dir: str) -> DataFrame:
             dom = nxt
             break
         dom = nxt
+    else:
+        raise RuntimeError(
+            "graph_dominator_tree_g7: dominator fixpoint did not converge "
+            f"within {max_rounds} rounds"
+        )
     # idom(v): the candidates dom(v)\{v} form a dominator CHAIN; the
     # immediate (closest) one is the chain element dominating the FEWEST
     # vertices overall (the root dominates everything, sz = |V|).

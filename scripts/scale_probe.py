@@ -912,22 +912,15 @@ def main() -> int:
         f"reached={n_reached}, depth={depth}"
     )
 
-    for algo in ("star", "hashmin"):
-        t0 = time.perf_counter()
-        n_comp = (
-            connected_components(e, algorithm=algo)
-            .select("comp")
-            .distinct()
-            .count()
-        )
-        print(
-            f"cc[{algo}] 1M edges: {round(time.perf_counter() - t0, 2)}s, "
-            f"components={n_comp}"
-        )
+    t0 = time.perf_counter()
+    n_comp = connected_components(e).select("comp").distinct().count()
+    print(
+        f"cc[star] 1M edges: {round(time.perf_counter() - t0, 2)}s, "
+        f"components={n_comp}"
+    )
 
-    # 200k-vertex path graph: diameter 200k. hash-min needs O(diameter)
-    # rounds (raises at max_iter=50); star converges in O(log n) rounds —
-    # this probe is WHY the star variant is the default.
+    # 200k-vertex path graph: diameter 200k. Star CC converges in O(log n)
+    # rounds, independent of the diameter.
     n_p = 200_000
     path = (
         spark.range(1, n_p)
@@ -937,12 +930,7 @@ def main() -> int:
     path.write.mode("overwrite").parquet("/tmp/scale_path_edges")
     p = spark.read.parquet("/tmp/scale_path_edges")
     t0 = time.perf_counter()
-    n_comp = (
-        connected_components(p, algorithm="star")
-        .select("comp")
-        .distinct()
-        .count()
-    )
+    n_comp = connected_components(p).select("comp").distinct().count()
     print(
         f"cc[star] {n_p}-vertex path (diameter {n_p}): "
         f"{round(time.perf_counter() - t0, 2)}s, components={n_comp}"

@@ -265,23 +265,17 @@ def test_components_match_union_find(spark, seed):
     assert got == want
 
 
-def test_star_and_hashmin_components_agree(spark):
-    """The O(log n)-round star algorithm and the O(diameter) hash-min
-    baseline must label identically — including on a path graph (worst case
-    for hash-min, the case star CC exists for) and with isolated vertices."""
+def test_star_components_on_path_with_isolated_vertices(spark):
+    """Star CC labels a path graph (the high-diameter case it exists for)
+    and isolated vertices exactly like a driver-side union-find."""
     path = [(i, i + 1) for i in range(1, 12)]  # diameter 11
     rows = path + [(20, 21), (21, 20)]
     verts = spark.createDataFrame([(v,) for v in range(1, 25)], "vid BIGINT")
-    e = edges_df(spark, rows)
     star = {
         (r.vid, r.comp)
-        for r in connected_components(e, vertices=verts, algorithm="star").collect()
+        for r in connected_components(edges_df(spark, rows), vertices=verts).collect()
     }
-    hashmin = {
-        (r.vid, r.comp)
-        for r in connected_components(e, vertices=verts, algorithm="hashmin").collect()
-    }
-    assert star == hashmin == set(py_components(range(1, 25), rows).items())
+    assert star == set(py_components(range(1, 25), rows).items())
 
 
 def test_pagerank_matches_sequential_reference(spark):
@@ -936,6 +930,52 @@ def test_multi_source_bfs_rejects_empty(spark):
 
     with _pytest.raises(ValueError):
         multi_source_bfs(_edge_df(spark, [(1, 2)]), [])
+
+
+# --- iteration bounds -------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "bfs",
+        "multi_source_bfs",
+        "temporal_bfs",
+        "longest_path_dag",
+        "sssp_weighted",
+        "strongly_connected_components",
+    ],
+)
+def test_iteration_bound_raises_naming_operator(spark, op):
+    """Every loop-core operator fails loudly at its bound instead of
+    returning a truncated answer: a 5-vertex chain (a 5-cycle for SCC)
+    needs more than one round."""
+    from datetime import datetime as dt
+
+    from distributed_graph_database_system_spark.operators import graph as G
+
+    chain = [(i, i + 1) for i in range(1, 5)]
+    weighted = spark.createDataFrame(
+        [(a, b, 1.0) for a, b in chain], "src BIGINT, dst BIGINT, weight DOUBLE"
+    )
+    timed = spark.createDataFrame(
+        [(a, b, dt(2024, 1, a)) for a, b in chain],
+        "src BIGINT, dst BIGINT, ts TIMESTAMP",
+    )
+    calls = {
+        "bfs": lambda: G.bfs(_edge_df(spark, chain), 1, max_iter=1),
+        "multi_source_bfs": lambda: G.multi_source_bfs(
+            _edge_df(spark, chain), [1], max_iter=1
+        ),
+        "temporal_bfs": lambda: G.temporal_bfs(timed, 1, max_iter=1),
+        "longest_path_dag": lambda: G.longest_path_dag(weighted, max_iter=1),
+        "sssp_weighted": lambda: G.sssp_weighted(weighted, 1, max_iter=1),
+        "strongly_connected_components": lambda: G.strongly_connected_components(
+            _edge_df(spark, chain + [(5, 1)]), max_hops=1
+        ),
+    }
+    with pytest.raises(RuntimeError, match=op):
+        calls[op]()
 
 
 # --- temporal (time-respecting) BFS -----------------------------------------
